@@ -44,7 +44,9 @@ def _kg(spark: SparkSession, sf_dir: str) -> query.KG:
     key = (id(spark), sf_dir)
     if key not in _kg_cache:
         t = _transcripts_from_documents(spark, sf_dir)
-        _kg_cache[key] = pipeline.build_kg(t, cache_projections=True)
+        kg = pipeline.build_kg(t)
+        pipeline.materialize(kg)
+        _kg_cache[key] = kg
     return _kg_cache[key]
 
 

@@ -47,7 +47,7 @@ def full_build(seed, n_conv):
     kg = pipeline.build_kg(transcripts)
     n_triples = pipeline.materialize(kg)
     wall = time.monotonic() - t0
-    kg.spo.unpersist(); kg.triples_str.unpersist(); transcripts.unpersist()
+    kg.unpersist(); transcripts.unpersist()
     return n_turns, n_triples, wall
 
 # Warmup: identical code path on a smaller disjoint corpus so the JVM JIT

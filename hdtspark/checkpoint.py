@@ -24,7 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import bitmap_triples, encode, extract
-from .dict_builder import FourSectDict, build_dict
+from .dict_builder import FourSectDict, build_dict, sections_of
 from .query import KG
 
 MANIFEST = "_manifest.json"
@@ -221,10 +221,7 @@ def materialize_kg(spark: SparkSession, transcripts: DataFrame, warehouse: str,
     dict_manifest = mat.read_manifest("dict")
     sections = mat.read_table("dict")
     d = FourSectDict(
-        shared=sections.filter("section = 'shared'").select("term", "id"),
-        subjects=sections.filter("section = 'subjects'").select("term", "id"),
-        predicates=sections.filter("section = 'predicates'").select("term", "id"),
-        objects=sections.filter("section = 'objects'").select("term", "id"),
+        **sections_of(sections),
         n_shared=dict_manifest["n_shared"],
         n_subjects=dict_manifest["n_subjects"],
         n_predicates=dict_manifest["n_predicates"],

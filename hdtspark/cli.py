@@ -32,7 +32,7 @@ import sys
 
 def _load_kg(mat):
     """Warehouse stages -> KG, or None if the warehouse was never built."""
-    from .dict_builder import FourSectDict
+    from .dict_builder import FourSectDict, sections_of
     from .query import KG
 
     m = mat.read_manifest("dict")
@@ -40,10 +40,7 @@ def _load_kg(mat):
         return None
     sections = mat.read_table("dict")
     d = FourSectDict(
-        shared=sections.filter("section = 'shared'").select("term", "id"),
-        subjects=sections.filter("section = 'subjects'").select("term", "id"),
-        predicates=sections.filter("section = 'predicates'").select("term", "id"),
-        objects=sections.filter("section = 'objects'").select("term", "id"),
+        **sections_of(sections),
         n_shared=m["n_shared"], n_subjects=m["n_subjects"],
         n_predicates=m["n_predicates"], n_objects=m["n_objects"],
     )

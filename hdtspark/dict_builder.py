@@ -19,6 +19,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from .ranking import dense_ids_grouped
+from .session import release
+
+
+def sections_of(ids: DataFrame) -> dict[str, DataFrame]:
+    """The four (term, id) sections filtered from a (section, term, id)
+    table, keyed by FourSectDict field name."""
+    return {name: ids.filter(F.col("section") == name).select("term", "id")
+            for name in ("shared", "subjects", "predicates", "objects")}
 
 
 @dataclass
@@ -31,14 +39,12 @@ class FourSectDict:
     n_subjects: int
     n_predicates: int
     n_objects: int
-    # the persisted (section, term, id) table all four sections filter from —
+    # the stored (section, term, id) table all four sections filter from —
     # kept so KG.unpersist() can release it (r2's documents-build regression
     # was persists accumulating across builds in one JVM)
     ids: DataFrame | None = None
     # persisted upstream intermediates (the ranked-terms input) released
-    # together with ids — kept cached so the dict build needs NO eager
-    # materialization job of its own (ids materializes inside the first
-    # consumer's job; one fewer sequential driver round per build)
+    # together with ids, or by pipeline.materialize once ids is pinned
     deps: tuple[DataFrame, ...] = ()
     # Max raw (pre-dedup) subject degree, computed for free inside the
     # ranking offsets pass: an upper bound on the true max degree, so the
@@ -49,7 +55,7 @@ class FourSectDict:
 
     def unpersist(self) -> None:
         if self.ids is not None:
-            self.ids.unpersist()
+            release(self.ids)
         for df in self.deps:
             df.unpersist()
 
@@ -98,8 +104,11 @@ class FourSectDict:
                 .sortWithinPartitions("section", "term"))
 
 
-def build_dict(triples_str: DataFrame) -> FourSectDict:
+def build_dict(triples_str: DataFrame, leaf: bool = False) -> FourSectDict:
     """Raw string triples -> four-section dictionary with dense IDs.
+
+    ``leaf``: store the ids table as a lazy ``localCheckpoint`` leaf (the
+    in-memory build, pipeline.py) instead of a MEMORY_AND_DISK persist.
 
     Section classification (shared = S∩O, subject-only = S\\O, object-only =
     O\\S — reference src/nt.rs:245-266) is ONE aggregation pass: explode each
@@ -159,24 +168,18 @@ def build_dict(triples_str: DataFrame) -> FourSectDict:
                     if g in ("shared", "subjects") and v is not None),
                    default=0)
     # The dictionary is the hot lookup structure: encode joins it three
-    # times and every query filters it.  Persist the (small) table once —
-    # recompute is deterministic (literal range buckets), so block loss is
-    # harmless, unlike round 1's persisted nondeterministic rank pass.
-    # Materialization is LAZY: ids fills its cache inside the first
-    # consumer's job (the encode joins) instead of a dedicated count() —
-    # one fewer sequential driver round per build.  The ranked-terms input
-    # cache therefore stays alive until KG.unpersist() releases both
+    # times and every query filters it, so store the (small) table once.
+    # A persist can be recomputed (deterministically: literal range
+    # buckets, unlike round 1's nondeterministic rank pass); a leaf cannot,
+    # but every plan over it is one node.  Neither takes a count() job of
+    # its own: ids fills inside the first consumer's job (the encode
+    # joins); AQE runs a leaf's shuffle stages when it is created.  The
+    # ranked-terms input cache stays alive until its owner releases it
     # (tracked in ``deps``; round 1's bug was never releasing it at all).
-    ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def section(name: str) -> DataFrame:
-        return ids.filter(F.col("section") == name).select("term", "id")
-
+    ids = (ids.localCheckpoint(eager=False) if leaf
+           else ids.persist(StorageLevel.MEMORY_AND_DISK))
     return FourSectDict(
-        shared=section("shared"),
-        subjects=section("subjects"),
-        predicates=section("predicates"),
-        objects=section("objects"),
+        **sections_of(ids),
         n_shared=totals.get("shared", 0),
         n_subjects=totals.get("subjects", 0),
         n_predicates=totals.get("predicates", 0),

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .dict_builder import FourSectDict
+from .session import release
 
 
 @dataclass
@@ -38,7 +39,8 @@ class KG:
     triples_str: DataFrame | None = None
     stats: dict = field(default_factory=dict)
     # persisted build intermediates (the packed pre-exchange encode output)
-    # released with the KG — see encode.encode_triples(deps_out=...)
+    # released by pipeline.materialize once spo is stored, else with the
+    # KG — see encode.encode_triples(deps_out=...)
     build_deps: tuple = ()
     # lazily-built, persisted string enumeration (see str_enum)
     _str_enum: DataFrame | None = field(default=None, repr=False)
@@ -62,16 +64,18 @@ class KG:
         return self._str_enum
 
     def unpersist(self, blocking: bool = False) -> None:
-        """Release every persist this KG owns (triples_str, spo, the
-        optionally-cached projections, the dictionary ids table, the string
-        enumeration).  Builds that construct several KGs in one JVM (bench,
-        multi-graph jobs) must call this between builds — r2's
+        """Release every block this KG owns: the triples_str persist, the
+        spo/ops/pso and dictionary ids leaves (``DataFrame.unpersist`` alone
+        leaves a localCheckpoint's RDD stored), the build caches and the
+        string enumeration.  Builds that construct several KGs in one JVM
+        (bench, multi-graph jobs) must call this between builds — r2's
         documents-path build ran 3-9x slower purely from the accumulated
-        memory footprint of earlier KGs' never-released caches."""
+        memory footprint of earlier KGs' never-released caches.  The KG
+        cannot be queried afterwards."""
         for df in (self.triples_str, self.spo, self.ops, self.pso,
                    self._str_enum, *self.build_deps):
             if df is not None:
-                df.unpersist(blocking)
+                release(df, blocking)
         self.dict.unpersist()
 
 
@@ -173,9 +177,15 @@ def ids_to_strings(kg: KG, ids: DataFrame) -> DataFrame:
     )
 
 
-def _empty_str_triples(kg: KG) -> DataFrame:
-    return kg.spo.sparkSession.createDataFrame(
-        [], "s string, p string, o string")
+def empty_frame(spark, schema: str) -> DataFrame:
+    """An empty DataFrame with the DDL ``schema``, planned in the JVM alone
+    (``createDataFrame([], ...)`` plans a Python RDD, and every action on
+    it starts a Python worker)."""
+    from pyspark.sql.types import StructType
+
+    return spark.range(0).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(schema).fields])
 
 
 def triples_with_pattern(kg: KG, s: str | None = None, p: str | None = None,
@@ -205,7 +215,7 @@ def triples_with_pattern(kg: KG, s: str | None = None, p: str | None = None,
         return df
     ids = triple_ids_with_pattern(kg, s, p, o)
     if ids is None:  # unknown constant: provably empty, no scan launched
-        return _empty_str_triples(kg)
+        return empty_frame(kg.spo.sparkSession, "s string, p string, o string")
     return ids_to_strings(kg, ids)
 
 

@@ -1,10 +1,11 @@
-"""SparkSession factory with scale-aware defaults."""
+"""SparkSession factory with scale-aware defaults, and the release of
+stored DataFrames."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -56,3 +57,24 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def leaf_rdd(df: DataFrame):
+    """The JVM RDD behind ``df`` when its plan is one ``localCheckpoint``
+    leaf (a ``LogicalRDD`` node), else None."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    return plan.rdd()
+
+
+def release(df: DataFrame, blocking: bool = False) -> None:
+    """Free the blocks ``df`` stores: its cache, and for a localCheckpoint
+    leaf the checkpointed RDD, which ``DataFrame.unpersist`` leaves in
+    place (the RDD stays listed in ``SparkContext.getPersistentRDDs``).
+    A released leaf cannot be read again: it has no lineage to recompute
+    from."""
+    df.unpersist(blocking)
+    rdd = leaf_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(blocking)

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .query import KG
+from .query import KG, empty_frame
 
 
 def query(kg: KG, q: str) -> DataFrame:
@@ -237,7 +237,7 @@ def bgp(kg: KG, patterns: list[tuple[str, str, str]]) -> DataFrame:
         all_vars = sorted({t[1:] for pat in patterns for t in pat
                            if _is_var(t)})
         schema = ", ".join(f"`{v}` string" for v in all_vars)
-        return kg.spo.sparkSession.createDataFrame([], schema)
+        return empty_frame(kg.spo.sparkSession, schema)
     ids_df, space = compiled
     return _translate_vars(kg, ids_df, space)
 

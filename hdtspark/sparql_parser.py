@@ -48,7 +48,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from .query import KG
+from .query import KG, empty_frame
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -1086,7 +1086,7 @@ def _closure_pairs_ids(kg: KG, pid: int | None, seed_id: int | None = None,
     if seeded:
         out_col = "b" if seed_on_a else "a"
         if pid is None or seed_id is None:
-            return spark.createDataFrame([], f"{out_col} long")
+            return empty_frame(spark, f"{out_col} long")
         base = _closure_base_ids(kg, pid)
         if not seed_on_a:
             # walk edges backwards: swap roles once, reuse the forward step
@@ -1107,7 +1107,7 @@ def _closure_pairs_ids(kg: KG, pid: int | None, seed_id: int | None = None,
         return acc.select(F.col("b").alias(out_col))
 
     if pid is None:
-        return spark.createDataFrame([], "a long, b long")
+        return empty_frame(spark, "a long, b long")
     base = _closure_base_ids(kg, pid)
     acc = base.distinct().localCheckpoint()
     frontier = acc
@@ -1208,7 +1208,7 @@ def _composite_pairs_ids(kg: KG, node) -> DataFrame:
             _node_global_expr("__cb", space["__cb"], n_shared, n_subj)
             .alias("b")))
     if not parts:
-        return spark.createDataFrame([], "a long, b long")
+        return empty_frame(spark, "a long, b long")
     out = parts[0]
     for other in parts[1:]:
         out = out.unionAll(other)
@@ -1349,13 +1349,12 @@ def _plus_rel_composite(kg: KG, s: str, node, o: str) -> DataFrame:
     if o_var:
         seed = _node_global_id(kg, s)
         if seed is None:
-            return kg.spo.sparkSession.createDataFrame(
-                [], f"`{o[1:]}` string")
+            return empty_frame(kg.spo.sparkSession, f"`{o[1:]}` string")
         ids = _closure_pairs_str(kg, base, seed=seed, seed_on_a=True)
         return _translate_node_global(kg, ids.select(F.col("b").alias(o[1:])))
     seed = _node_global_id(kg, o)
     if seed is None:
-        return kg.spo.sparkSession.createDataFrame([], f"`{s[1:]}` string")
+        return empty_frame(kg.spo.sparkSession, f"`{s[1:]}` string")
     ids = _closure_pairs_str(kg, base, seed=seed, seed_on_a=False)
     return _translate_node_global(kg, ids.select(F.col("b").alias(s[1:])))
 
@@ -1494,8 +1493,8 @@ def _negset_arm(kg: KG, s: str, excl: tuple, o: str) -> DataFrame | bool:
     spark = kg.spo.sparkSession
     s_var, o_var = s.startswith("?"), o.startswith("?")
     var_cols = sorted({t[1:] for t in (s, o) if t.startswith("?")})
-    empty = spark.createDataFrame(
-        [], ", ".join(f"`{v}` string" for v in var_cols)) if var_cols else False
+    empty = empty_frame(
+        spark, ", ".join(f"`{v}` string" for v in var_cols)) if var_cols else False
 
     sid, _, oid = _lookup_ids(kg, None if s_var else s, None,
                               None if o_var else o)

@@ -7,9 +7,11 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
-from hdtspark import encode, ranking
+from hdtspark import encode, pipeline, query, ranking, rules, synth
+from hdtspark.session import leaf_rdd
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -88,10 +90,11 @@ def test_bound_pattern_routes_through_id_path(spark):
     assert not [l for l in plan.splitlines()
                 if "Filter" in l and rules.P_MENTIONS in l], plan
     # the leaf filter is an id equality on the looked-up predicate id,
-    # pushed into the cached projection scan (it may print rewritten
-    # through the packed-long unpack expressions, so match on the id value)
+    # directly over the spo leaf scan (it may print rewritten through the
+    # packed-long unpack expressions, so match on the id value)
     _, pid, _ = query._lookup_ids(kg, None, rules.P_MENTIONS, None)
-    assert re.search(rf"InMemoryTableScan.*= {pid}\)", plan), plan
+    assert re.search(rf"Filter [^\n]*= {pid}\)[^\n]*\n[ :|+-]*Scan ExistingRDD",
+                     plan), plan
     # planning + executing the query never built the string enumeration
     assert df.count() > 0
     assert kg._str_enum is None
@@ -152,9 +155,9 @@ def test_path_closure_iterates_on_ids(kg, tmp_path):
 
     The plan is asserted over a parquet-backed PSO (the materialized
     deployment shape) so the explain output shows only the iteration's own
-    operators — the in-memory golden KG would print the cached projection's
-    stored BUILD lineage (which legitimately contains dictionary joins)
-    inline with the step plan."""
+    operators and the pushed p-filter — the in-memory golden KG is not
+    materialized, so it would print its lazy PSO projection (a range
+    exchange over the spo leaf) inline with the step plan."""
     from pyspark.sql.types import LongType
 
     from hdtspark import query, rules, sparql_parser
@@ -225,3 +228,65 @@ def test_materialized_ops_scan_pushes_filters(spark, kg, tmp_path):
     assert "EqualTo(o,42)" in plan and "EqualTo(p,3)" in plan, plan
     # column pruning: the scan reads only the three id columns
     assert "ReadSchema: struct<o:bigint,p:bigint,s:bigint>" in plan, plan
+
+
+@pytest.fixture(scope="module")
+def mat_kg(spark):
+    """A small in-memory KG after pipeline.materialize."""
+    t = spark.createDataFrame(synth.generate_rows(5, 8),
+                              synth.TRANSCRIPTS_SCHEMA)
+    kg = pipeline.build_kg(t, with_adjacency=False)
+    pipeline.materialize(kg)
+    yield kg
+    kg.unpersist()
+
+
+def _tree(plan) -> list:
+    """Every node of a JVM logical plan, depth first."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+@pytest.mark.parametrize("shape", ["s", "sp", "p", "o", "po"])
+def test_bound_query_plans_over_kg_leaves_only(mat_kg, shape):
+    """After materialize, a bound query's analyzed plan reads only the
+    KG's localCheckpoint leaves (spo/ops/pso and the dictionary ids) and
+    holds none of the build lineage: no ranking Window, no term-explode
+    Generate, no dedup/flags Aggregate."""
+    kg = mat_kg
+    const = {"s": rules.turn_iri(synth.conv_id_for(1), 0),
+             "p": rules.P_ROLE if "s" in shape else rules.P_TYPE,
+             "o": rules.C_ENTITY}
+    df = query.triples_with_pattern(kg, **{k: const[k] for k in shape})
+    assert df.count() > 0
+    kg_leaves = {leaf_rdd(t).id()
+                 for t in (kg.spo, kg.ops, kg.pso, kg.dict.ids)}
+    nodes = _tree(df._jdf.queryExecution().analyzed())
+    leaves = [n for n in nodes if n.children().size() == 0]
+    assert leaves and all(
+        n.nodeName() == "LogicalRDD" and n.rdd().id() in kg_leaves
+        for n in leaves), [n.nodeName() for n in leaves]
+    names = {n.nodeName() for n in nodes}
+    assert not names & {"Window", "Generate", "Aggregate"}, names
+
+
+@pytest.mark.parametrize("bound", [{"o": rules.C_ENTITY},
+                                   {"p": rules.P_MENTIONS}])
+def test_materialized_projections_do_not_reshuffle_spo(mat_kg, bound):
+    """??O and ?P? read the pinned OPS/PSO leaves: no range exchange."""
+    plan = _plan(query.triples_with_pattern(mat_kg, **bound), "simple")
+    assert "Exchange rangepartitioning" not in plan, plan
+
+
+def test_empty_frame_is_jvm_only(spark):
+    """The empty-result helper plans no Python RDD (``createDataFrame([])``
+    does, and counting it starts a Python worker)."""
+    df = query.empty_frame(spark, "`x y` string, b long")
+    assert df.schema.simpleString() == "struct<x y:string,b:bigint>"
+    assert "ExistingRDD" not in _plan(df)
+    assert leaf_rdd(df) is None and df.count() == 0

@@ -107,3 +107,23 @@ def test_triple_ids_with_id_pattern(kg, golden_oracle):
     # 0-sentinel behaves as wildcard, matching the reference
     assert q.triple_ids_with_id_pattern(kg, 0, 0, 0).count() == \
         len(golden_oracle.spo)
+
+
+def test_unpersist_releases_every_stored_rdd(spark):
+    """build -> materialize -> unpersist leaves the set of persistent RDDs
+    as it was before the build: the localCheckpoint leaves are released
+    too, which DataFrame.unpersist alone does not do."""
+    from hdtspark import pipeline, synth
+
+    t = spark.createDataFrame(synth.generate_rows(3, 5),
+                              synth.TRANSCRIPTS_SCHEMA)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    kg = pipeline.build_kg(t)
+    assert pipeline.materialize(kg) > 0
+    assert query.triples_with_pattern(kg, p=rules.P_TYPE).count() > 0
+    assert set(jsc.getPersistentRDDs().keySet()) - before
+    kg.unpersist(blocking=True)
+    # a subset, not equality: Spark's context cleaner may drop RDDs of
+    # earlier tests' garbage-collected DataFrames meanwhile
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
